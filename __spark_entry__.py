@@ -24,22 +24,23 @@ from logstash_filter_elasticsearch_spark.operators.aggregate import (
     salted_dedup_first,
 )
 from logstash_filter_elasticsearch_spark.operators.dedup import (
-    _spread,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    normalize_text,
     simhash,
 )
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
 from logstash_filter_elasticsearch_spark.operators.similarity import cosine_topk, lsh_topk
 from logstash_filter_elasticsearch_spark.operators.text import (
-    BPE_ISH,
     LANG_MARKERS,
     STOPWORDS,
+    bpe_ish_token_count,
+    fingerprint_md5,
     lang_id,
     quality_features,
+    whitespace_token_count,
 )
+from logstash_filter_elasticsearch_spark.partitioning import SMALL_PLAN_BYTES, spread
 from logstash_filter_elasticsearch_spark.plans.esql import run_esql
 
 STOP_LIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -89,9 +90,7 @@ def q_fields_multi_hit(spark, sf_dir):
     that parallelizing the single-file probe scan wins (measured
     1.33s -> 1.0s at sf1.0; the lighter top-1 enrich queries measured
     the same spread as a LOSS and stay unspread)."""
-    from logstash_filter_elasticsearch_spark.operators.dedup import _spread_by
-
-    events = _spread_by(_t(spark, sf_dir, "events"), ["event_id"])
+    events = spread(_t(spark, sf_dir, "events"), by=["event_id"], min_bytes=SMALL_PLAN_BYTES)
     orders = _t(spark, sf_dir, "orders")
     spec = EnrichSpec(
         event_key="user_id",
@@ -214,8 +213,7 @@ def q_matched_decoration(spark, sf_dir):
 def q_quarantine_parse(spark, sf_dir):
     """A11/A1: regex parse with tag_on_failure quarantine routing
     (dsl_executor.rb:79-87). Docs lacking 'key' get the failure tag."""
-    from logstash_filter_elasticsearch_spark.operators.enrich import tag_failures
-    from logstash_filter_elasticsearch_spark.operators.parse import extract_first
+    from logstash_filter_elasticsearch_spark.operators.parse import extract_first, tag_failures
 
     docs = _t(spark, sf_dir, "documents")
     parsed = docs.withColumn(
@@ -287,9 +285,7 @@ def q_topk_per_key(spark, sf_dir):
     -> 0.52s at sf1.0; guide §2.2 partition sizing)."""
     from pyspark.sql.window import Window
 
-    from logstash_filter_elasticsearch_spark.operators.dedup import _spread_by
-
-    orders = _spread_by(_t(spark, sf_dir, "orders"), ["o_custkey"])
+    orders = spread(_t(spark, sf_dir, "orders"), by=["o_custkey"], min_bytes=SMALL_PLAN_BYTES)
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -411,24 +407,22 @@ def q_lang_id(spark, sf_dir):
 
 
 def q_token_counts(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).alias("ws_tokens"),
-        F.size(F.regexp_extract_all("text", F.lit(BPE_ISH), 0)).alias("bpe_tokens"),
+        whitespace_token_count(F.col("text")).alias("ws_tokens"),
+        bpe_ish_token_count(F.col("text")).alias("bpe_tokens"),
     )
 
 
 def q_fingerprint(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.select(
-        "doc_id", F.md5(normalize_text(F.col("text"))).alias("fingerprint")
-    )
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    return fingerprint_md5(docs, "text").select("doc_id", "fingerprint")
 
 
 def q_multimodal_meta(spark, sf_dir):
     """Binary-column plumbing: encode->binary, native byte metadata."""
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     payload = F.encode("text", "utf-8")
     return docs.select(
         "doc_id",

@@ -13,7 +13,8 @@ response into the event (dsl_executor.rb:28-91):
                            (dsl_executor.rb:71-77)
 * ``[@metadata][total_hits]`` (dsl_executor.rb:48,99-107)
 * decoration only when matched (elasticsearch.rb:218-221)
-* ``tag_on_failure`` quarantine tags (dsl_executor.rb:79-87)
+* ``tag_on_failure`` quarantine tags (dsl_executor.rb:79-87) — applied
+  by ``parse.tag_failures`` at the parse stage, not here
 * ``result_size`` / ``sort`` top-k hit selection (elasticsearch.rb:127-131)
 * left-outer semantics: no match -> event passes through un-enriched
   (spec elasticsearch_dsl_spec.rb:180-199)
@@ -42,9 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logstash_filter_elasticsearch_spark.functions.fieldref import field_ref_to_path
-from logstash_filter_elasticsearch_spark.operators.dedup import _spread, _spread_by
-
-DEFAULT_FAILURE_TAG = "_elasticsearch_lookup_failure"  # elasticsearch.rb:133-134
+from logstash_filter_elasticsearch_spark.partitioning import SMALL_PLAN_BYTES, spread
 
 
 def _get(col: Column, path: str) -> Column:
@@ -139,7 +138,6 @@ class EnrichSpec:
     sort: list[tuple] = field(default_factory=lambda: [("@timestamp", "desc")])
     enable_sort: bool = True  # elasticsearch.rb:127-128
     target: str | None = None  # nest dest fields under one struct (dsl_executor.rb:21-25)
-    tag_on_failure: list[str] = field(default_factory=lambda: [DEFAULT_FAILURE_TAG])
     add_tag_on_match: list[str] = field(default_factory=list)
     broadcast: bool = True
     keep_hits: bool = False  # expose the raw _hits array for debugging/tests
@@ -258,7 +256,7 @@ class Enricher:
         # raw rows BY THE JOIN KEY parallelizes it with one exchange
         # that the groupBy then reuses (guide §2.4), and is a no-op for
         # well-laid-out multi-file tables
-        lookup = _spread_by(lookup, [spec.lookup_key])
+        lookup = spread(lookup, by=[spec.lookup_key], min_bytes=SMALL_PLAN_BYTES)
         # size-0 search (agg-only, spec elasticsearch_dsl_spec.rb:157-178)
         # or no copy mappings: skip hit collection entirely — the
         # broadcast payload shrinks to key + aggregates.
@@ -496,22 +494,3 @@ def scalar_or_array_json(array_col: Column) -> Column:
         F.size(array_col) == 1, F.regexp_replace(j, r"^\[|\]$", "")
     ).otherwise(j)
 
-
-def tag_failures(
-    df: DataFrame, fail_condition: Column, tags_to_add: list[str] | None = None
-) -> DataFrame:
-    """Append ``tag_on_failure`` tags where the condition holds.
-
-    The event is still delivered (reference: rescue -> tag -> continue,
-    dsl_executor.rb:79-87; esql_executor.rb:39-42). Downstream routing
-    sends tagged rows to the quarantine sink.
-    """
-    tags_to_add = tags_to_add or [DEFAULT_FAILURE_TAG]
-    existing = df["tags"] if "tags" in df.columns else F.array().cast("array<string>")
-    existing = F.coalesce(existing, F.array().cast("array<string>"))
-    return df.withColumn(
-        "tags",
-        F.when(
-            fail_condition, F.array_union(existing, F.array(*[F.lit(t) for t in tags_to_add]))
-        ).otherwise(existing),
-    )

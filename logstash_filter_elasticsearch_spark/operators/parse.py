@@ -22,12 +22,27 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logstash_filter_elasticsearch_spark.operators.enrich import tag_failures
-
 PARSE_FAILURE_TAG = "_grokparsefailure"
 
 # doc_id shape per FIXTURES.md F1: "{source}/{shard:04d}/{seq:012d}-{epoch}"
 DOC_ID_PATTERN = r"^([a-z][a-z0-9_]*)/(\d{4})/(\d{12})-(\d+)$"
+
+
+def tag_failures(df: DataFrame, fail_condition: Column, tags_to_add: list[str]) -> DataFrame:
+    """Append ``tag_on_failure`` tags where the condition holds.
+
+    The event is still delivered (reference: rescue -> tag -> continue,
+    dsl_executor.rb:79-87; esql_executor.rb:39-42). Downstream routing
+    sends tagged rows to the quarantine sink.
+    """
+    existing = df["tags"] if "tags" in df.columns else F.array().cast("array<string>")
+    existing = F.coalesce(existing, F.array().cast("array<string>"))
+    return df.withColumn(
+        "tags",
+        F.when(
+            fail_condition, F.array_union(existing, F.array(*[F.lit(t) for t in tags_to_add]))
+        ).otherwise(existing),
+    )
 
 
 def extract_first(col: Column, patterns: list[str], group: int = 1) -> Column:

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from logstash_filter_elasticsearch_spark.operators.dedup import _spread
+from logstash_filter_elasticsearch_spark.partitioning import SMALL_PLAN_BYTES, spread
 
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
@@ -152,9 +152,9 @@ def cosine_topk(
                 ["query_id", "neighbor_id", "cos"],
             )
 
-    src = _spread(
+    src = spread(
         corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v")),
-        min_bytes=4 * 1024 * 1024,
+        min_bytes=SMALL_PLAN_BYTES,
     )
     scored = src.mapInArrow(
         score, schema=f"query_id {id_t}, neighbor_id {id_t}, cos double"
@@ -213,7 +213,6 @@ def _bucket_rows(
     vec_col: str,
     id_alias: str,
     planes_by_table: list[np.ndarray],
-    spread: bool = True,
 ) -> DataFrame:
     """(id, v, n, table, bucket) rows — one per LSH table per vector.
 
@@ -259,8 +258,8 @@ def _bucket_rows(
 
     # spread coarse scans (single-file tables arrive as ONE partition —
     # guide §2.5) so the numpy projection parallelizes across the pool;
-    # callers pass spread=False for tiny broadcast-bound query sides
-    # (spreading 5 rows over 64 python tasks just costs task overhead)
+    # inputs below the size floor stay put (spreading a few rows over
+    # 64 python tasks just costs task overhead)
     # id cast to long JVM-side: the Arrow batches pass through to the
     # declared long output column unconverted, so the input vector type
     # must already match (the old pandas path silently coerced)
@@ -268,8 +267,7 @@ def _bucket_rows(
         F.col(id_col).cast("long").alias("i"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if spread:
-        src = _spread(src, min_bytes=4 * 1024 * 1024)
+    src = spread(src, min_bytes=SMALL_PLAN_BYTES)
     return src.mapInArrow(
         stage,
         schema=f"{id_alias} long, v array<double>, n double, table int, bucket long",
@@ -282,10 +280,12 @@ def _list_to_matrix(v, num_rows: int, dim: int) -> np.ndarray:
     Zero-copy flatten when every row has exactly ``dim`` elements (the
     operator contract); falls back to the per-row python path for
     ragged/null inputs so error behavior matches the old pandas stage.
+    The stride check is on the list offsets, not the flattened length:
+    ragged rows whose lengths happen to sum to ``num_rows * dim`` would
+    otherwise reshape into silently misaligned rows.
     """
-    flat = v.flatten()
-    if len(flat) == num_rows * dim and v.null_count == 0:
-        return flat.to_numpy(zero_copy_only=False).reshape(num_rows, dim)
+    if v.null_count == 0 and np.all(np.diff(v.offsets.to_numpy()) == dim):
+        return v.flatten().to_numpy(zero_copy_only=False).reshape(num_rows, dim)
     return np.array(v.to_pylist(), dtype=np.float64)
 
 
@@ -296,7 +296,6 @@ def _cell_rows(
     id_alias: str,
     centroids: np.ndarray,
     n_probe: int,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, v, n, cell) rows — top n_probe centroid cells per vector,
     computed with one numpy matmul per Arrow batch. mapInArrow so the
@@ -326,8 +325,7 @@ def _cell_rows(
         F.col(id_col).cast("long").alias("i"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if spread:
-        src = _spread(src, min_bytes=4 * 1024 * 1024)
+    src = spread(src, min_bytes=SMALL_PLAN_BYTES)
     return src.mapInArrow(
         stage, schema=f"{id_alias} long, v array<double>, n double, cell int"
     )
@@ -397,27 +395,6 @@ def train_centroids(
                 c = members.mean(axis=0)
                 cent[j] = c / max(np.linalg.norm(c), 1e-12)
     return cent.tolist()
-
-
-def _nearest_centroids(vec_col: Column, centroids: list[list[float]], n: int) -> Column:
-    """Array of the n centroid ids with highest cosine to the vector —
-    pure Column expressions (sort an array of (score, id) structs).
-    Centroid dots are unrolled constant-vector products: codegen-
-    compiled multiply-adds, no interpreted lambdas on the scan."""
-    dim = len(centroids[0])
-    v = vec_col.cast("array<double>")
-    inv_norm = F.lit(1.0) / norm(v, dim)
-    scored = F.array(
-        *[
-            F.struct(
-                (reduce(add, (v[i] * float(c[i]) for i in range(dim))) * inv_norm).alias("s"),
-                F.lit(ci).alias("c"),
-            )
-            for ci, c in enumerate(centroids)
-        ]
-    )
-    ranked = F.reverse(F.array_sort(scored))
-    return F.transform(F.slice(ranked, 1, n), lambda e: e["c"])
 
 
 def ivf_topk(
@@ -535,6 +512,8 @@ def cosine_near_dup_pairs(
     mat = _list_to_matrix(
         vchunk, tbl.num_rows, len(vchunk[0]) if tbl.num_rows else 0
     ).astype(np.float64, copy=False)
+    if not mat.flags.writeable:  # zero-copy view of an array<double> column
+        mat = mat.copy()
     mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     order = np.argsort(ids)
     bc = df.sparkSession.sparkContext.broadcast((ids[order], mat[order]))
@@ -569,9 +548,9 @@ def cosine_near_dup_pairs(
     # spread the probe side: the whole corpus-sized matmul otherwise
     # runs in ONE task when the input is a single-file scan (guide
     # §2.5) — measured 19.5s -> ~1s at 20k vectors on 32 cores
-    src = _spread(
+    src = spread(
         df.select(F.col(id_col).cast("long").alias("i"), F.col(vec_col).alias("v")),
-        min_bytes=4 * 1024 * 1024,
+        min_bytes=SMALL_PLAN_BYTES,
     )
     return src.mapInArrow(score, schema="id_a long, id_b long, cos double")
 

@@ -10,13 +10,15 @@ Physical plan shape (verified via .explain in tests):
       -> regexp parse projections        [whole-stage codegen]
       -> BroadcastHashJoin (lookup)      [no shuffle of the big side]
       -> route column
-      -> (a) exchange on (route, file-salt) -> partitioned fan-out write
-      -> (b) salted two-phase aggregate  -> per-sink metrics
+      -> partitionBy("route") fan-out write into a staging dir
+    then, over the staged files:
+      -> column-pruned read-back + plain groupBy(route) -> per-sink metrics
 
-The only shuffle of the event table is the single repartition before
-the fan-out write, keyed by (route, hash-salt) so the 60%-skewed route
-spreads over many tasks. Per-sink aggregation is salted two-phase
-(operators/aggregate.py) so a hot route never lands on one reducer.
+The event table is never shuffled: each scan task writes its own slice
+of every route it sees, through Spark's sort-based dynamic-partition
+writer (session.py), so the 60%-skewed route is spread over all tasks.
+The per-sink metrics come from a second, small job over the staged
+files, so they describe exactly the bytes that get committed.
 
 Resume: checkpoint.Manifest records committed sinks + lineage +
 metrics; re-running skips them (idempotent — tested by kill/resume).
@@ -35,7 +37,6 @@ from pyspark.sql import functions as F
 
 from logstash_filter_elasticsearch_spark.checkpoint import Manifest, publish_atomic
 from logstash_filter_elasticsearch_spark.fsio import fs_for
-from logstash_filter_elasticsearch_spark.operators.aggregate import salted_agg
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
 from logstash_filter_elasticsearch_spark.operators.parse import parse_doc_ids
 
@@ -176,25 +177,6 @@ class PipelineConfig:
     # presumed in-flight (protected from GC) before being treated as
     # crashed debris
     snapshot_gc_grace_s: float = 86400.0
-    # Fan-out write strategy:
-    #   "direct"    — no shuffle; every scan task writes its slice of each
-    #                 route it sees (sort-free via
-    #                 spark.sql.maxConcurrentOutputFileWriters). Perfectly
-    #                 skew-proof (a 60% route is spread over ALL tasks) and
-    #                 the fastest option measured here (4.0s vs 12.9s for
-    #                 the salted shuffle on 2M rows at 32 threads). File
-    #                 count = tasks x routes — right up to a few hundred
-    #                 tasks.
-    #   "salted"    — repartition on (route, hash(doc_id) % files_per_route)
-    #                 first. Costs a full shuffle of the event table but
-    #                 caps files at files_per_route per route; choose this
-    #                 on a 1000-executor cluster where tasks x routes would
-    #                 explode the file count / catalog manifest.
-    #   "rebalance" — AQE rebalance hint on route: coalesces small routes,
-    #                 splits the hot one at runtime; middle ground.
-    write_strategy: str = "direct"
-    files_per_route: int = 32
-    salt_buckets: int = 32
     # enrichment config (reference option names, elasticsearch.rb:59-161)
     fields: dict[str, str] = field(
         default_factory=lambda: {
@@ -240,33 +222,6 @@ def build_enriched(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def compute_route_aggregates(df: DataFrame, salt_buckets: int = 32) -> DataFrame:
-    """Per-sink aggregates (the set-form of aggregation_fields,
-    dsl_executor.rb:71-77): rows, token sum, matched rows per route."""
-    return salted_agg(
-        df.withColumn("_matched_i", F.col("matched").cast("long")),
-        keys=["route"],
-        aggs={
-            "rows": ("count", "route"),
-            "sum_n_tok": ("sum", "n_tok"),
-            "matched_rows": ("sum", "_matched_i"),
-        },
-        salt_buckets=salt_buckets,
-    )
-
-
-def _apply_write_strategy(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    if cfg.write_strategy == "salted":
-        # cap files at files_per_route per route; the hash salt spreads
-        # the skewed route over many reducers (one hot route != one task)
-        return df.repartition(
-            F.col("route"), F.pmod(F.hash("doc_id"), F.lit(cfg.files_per_route))
-        )
-    if cfg.write_strategy == "rebalance":
-        return df.hint("rebalance", "route")
-    return df  # direct: sort-free concurrent writers, no shuffle
-
-
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """Execute with manifest-gated idempotent commits. Returns metrics.
 
@@ -308,7 +263,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     writable = df
     if committed_before:  # resume: skip already-committed sinks
         writable = writable.filter(~F.col("route").isin(sorted(committed_before)))
-    writable = _apply_write_strategy(writable, cfg)
     t0 = _time.monotonic()
     writable.write.mode("overwrite").partitionBy("route").format(
         cfg.sink_format

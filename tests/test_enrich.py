@@ -11,8 +11,8 @@ from logstash_filter_elasticsearch_spark.operators.enrich import (
     EnrichSpec,
     Enricher,
     scalar_or_array_json,
-    tag_failures,
 )
+from logstash_filter_elasticsearch_spark.operators.parse import tag_failures
 
 
 @pytest.fixture(scope="module")

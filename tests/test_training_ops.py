@@ -299,10 +299,6 @@ def test_cosine_near_dup_exact_vs_numpy(spark):
     vecs = rng.standard_normal((25, 8)).astype("float32")
     vecs[7] = vecs[3] * 2.0          # exact direction dup
     vecs[9] = vecs[4] + 0.01 * rng.standard_normal(8).astype("float32")
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id int, embedding array<float>"
-    )
-    got = {(r.id_a, r.id_b) for r in cosine_near_dup_pairs(df, threshold=0.95).collect()}
     M = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     sims = M @ M.T
     exp = {
@@ -311,7 +307,27 @@ def test_cosine_near_dup_exact_vs_numpy(spark):
         for b in range(a + 1, 25)
         if sims[a][b] >= 0.95
     }
-    assert got == exp and (3, 7) in got and (4, 9) in got
+    # array<double> arrives as a read-only zero-copy Arrow view
+    for vec_type in ("array<float>", "array<double>"):
+        df = spark.createDataFrame(
+            [(i, v.tolist()) for i, v in enumerate(vecs)], f"vec_id int, embedding {vec_type}"
+        )
+        got = {(r.id_a, r.id_b) for r in cosine_near_dup_pairs(df, threshold=0.95).collect()}
+        assert got == exp and (3, 7) in got and (4, 9) in got, vec_type
+
+
+def test_list_to_matrix_rejects_ragged_rows():
+    import numpy as np
+    import pyarrow as pa
+
+    from logstash_filter_elasticsearch_spark.operators.similarity import _list_to_matrix
+
+    # lengths 1 + 3 sum to rows x dim, yet no row has dim elements
+    with pytest.raises(ValueError):
+        _list_to_matrix(pa.array([[1.0], [2.0, 3.0, 4.0]]), 2, 2)
+    # a sliced array's offsets do not start at 0; uniform rows still reshape
+    sliced = pa.array([[0.0, 0.0], [1.0, 2.0], [3.0, 4.0]]).slice(1)
+    np.testing.assert_array_equal(_list_to_matrix(sliced, 2, 2), [[1.0, 2.0], [3.0, 4.0]])
 
 
 def test_lsh_near_dup_finds_planted(spark):
